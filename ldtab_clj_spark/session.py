@@ -90,8 +90,7 @@ def get_spark(app_name: str = "ldtab_clj_spark",
         # shuffle-join query (q18 1.60->1.54 / 0.59->0.53, minhash
         # 2.71->2.51, term_stats 1.18->1.13, diff 0.90->0.85; rest
         # within noise), no regressions at either scale.
-        .config("spark.sql.join.preferSortMergeJoin",
-                os.environ.get("SPARK_PREFER_SMJ", "false"))
+        .config("spark.sql.join.preferSortMergeJoin", "false")
         # 16 MB auto-broadcast cap (was 64 MB): a parquet-size estimate
         # near 64 MB is a multi-million-row relation whose broadcast
         # build is serial driver+executor work and whose hash relation
@@ -102,8 +101,7 @@ def get_spark(app_name: str = "ldtab_clj_spark",
         # supplier, prefix/centroid tables) stay far under 16 MB at any
         # SF, and explicit F.broadcast hints are unaffected.
         .config("spark.sql.autoBroadcastJoinThreshold",
-                os.environ.get("SPARK_BROADCAST_THRESHOLD",
-                               str(16 * 1024 * 1024)))
+                str(16 * 1024 * 1024))
         # heap is WORKLOAD-dependent, measured both ways: 8g wins the
         # local[32] query suite (16g doubled bench.py 32s -> 63s —
         # same shape as r3's rejected 24g trial: long G1 pauses across

@@ -45,7 +45,8 @@ def make_doc_spans(seed: int, doc_id: int, hot_frac: float = 0.0,
 
     ``hot_frac`` > 0 redirects that fraction of entity mentions to a
     single entity (default one OUTSIDE the broadcast head set) — the
-    adversarial skew case for the salted tail join (tools/bench_skew.py).
+    adversarial skew case for the salted tail join (pinned by
+    tests/test_pipeline.py::test_link_broadcast_and_salted_paths_agree).
     """
     rng = random.Random((seed << 40) ^ (int(doc_id) * 2654435761))
 

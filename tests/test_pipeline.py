@@ -237,18 +237,20 @@ def test_pipeline_invariant_to_partition_count(spark):
     assert stmts(2) == stmts(16)
 
 
-def test_link_broadcast_and_salted_paths_agree(spark):
+@pytest.mark.parametrize("hot_frac", [0.0, 0.7])
+def test_link_broadcast_and_salted_paths_agree(spark, hot_frac):
     """The tail-dictionary join has two physical strategies — explicit
     broadcast (small dict, the sandbox default) and salted shuffle
     join (the >BROADCAST_TAIL_MAX_ROWS fallback, the 100 TB path).
     Both must resolve identically; the salted path otherwise has no
-    pipeline-default coverage."""
+    pipeline-default coverage. ``hot_frac=0.7`` forces the bad case
+    for the salt: 70% of mentions name one tail entity."""
     from unittest import mock
 
     from ldtab_clj_spark.operators import link
     from ldtab_clj_spark.synth import synth_docs
 
-    docs = synth_docs(spark, 100, seed=7)
+    docs = synth_docs(spark, 100, seed=7, hot_frac=hot_frac)
 
     def stmts():
         df = build_statements(docs, entity_dictionary(spark))

@@ -133,13 +133,21 @@ def test_three_formats_agree(spark, tmp_path, prefix_df):
     assert any("someValuesFrom" in (o or "") for _, _, o, _, _ in ttl)
 
 
-@pytest.mark.skipif(not REF_OWL.exists(), reason="reference not mounted")
-def test_reference_ontology_roundtrip(spark, tmp_path, prefix_df):
-    """Import the reference's OWN oracle fixture (ontology.owl), export
-    to N-Triples, re-import: the two statement tables must agree at
-    P/R ≥ 0.95 — the reference's round-trip criterion."""
+def test_reference_ontology_roundtrip(spark, tmp_path, prefix_df, owl_path):
+    """Import an OWL ontology (the in-repo fixture, or the reference's
+    OWN oracle fixture ontology.owl), export to N-Triples, re-import:
+    the two statement tables must agree at P/R ≥ 0.95 — the
+    reference's round-trip criterion. The first import must exercise
+    every thick-triple fold: GCI (JSON subject), RDF lists, annotations
+    and reifications."""
     from ldtab_clj_spark.operators.export import write_ntriples
-    first = import_rdfxml(spark, str(REF_OWL), prefix_df).localCheckpoint()
+    first = import_rdfxml(spark, str(owl_path), prefix_df).localCheckpoint()
+    rows = first.collect()
+    assert any(r.subject.startswith("{") for r in rows)
+    assert any("_JSONLIST" in r.datatype + (r.object or "") for r in rows)
+    assert any(r.annotation is not None for r in rows)
+    assert any('"meta":"rdf:Reification"' in (r.annotation or "")
+               for r in rows)
     nt_dir = str(tmp_path / "onto_nt")
     write_ntriples(first, prefix_df, nt_dir)
     from ldtab_clj_spark.sources.ntriples import import_ntriples

@@ -150,16 +150,11 @@ def test_inverse_of_untyped():
     assert not any(p == "rdf:type" for p, _, _ in got)
 
 
-def test_typed_owl_roundtrip_reference_ontology(spark, tmp_path):
-    """ontology.owl → statements → typed-OWL N-Triples → re-import at
-    P/R ≥ 0.95 (the corpus is canonical OWL, so typed normalization is
-    near-identity on it)."""
-    from pathlib import Path
-
-    import pytest
-    ref = Path("/root/reference/resources/ontology.owl")
-    if not ref.exists():
-        pytest.skip("reference not mounted")
+def test_typed_owl_roundtrip_reference_ontology(spark, tmp_path, owl_path):
+    """ontology.owl (in-repo fixture, or the reference's own) →
+    statements → typed-OWL N-Triples → re-import at P/R ≥ 0.95 (the
+    corpus is canonical OWL, so typed normalization is near-identity
+    on it)."""
     from ldtab_clj_spark.operators.export import write_ntriples
     from ldtab_clj_spark.sources.ntriples import import_ntriples
     from ldtab_clj_spark.sources.rdfxml import import_rdfxml
@@ -170,7 +165,7 @@ def test_typed_owl_roundtrip_reference_ontology(spark, tmp_path):
          ("owl", "http://www.w3.org/2002/07/owl#"),
          ("xsd", "http://www.w3.org/2001/XMLSchema#")],
         "prefix string, base string")
-    first = import_rdfxml(spark, str(ref), prefix_df).localCheckpoint()
+    first = import_rdfxml(spark, str(owl_path), prefix_df).localCheckpoint()
     out = str(tmp_path / "typed_nt")
     write_ntriples(first, prefix_df, out, typed_owl=True)
     again = import_ntriples(spark, out, prefix_df)
