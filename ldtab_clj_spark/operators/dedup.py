@@ -333,7 +333,8 @@ def _simhash_arrow(docs: DataFrame, text_col: str) -> DataFrame:
 
 def _band_pairs(bands_df: DataFrame) -> DataFrame:
     """(doc_id, band, bucket) → distinct candidate pairs (doc_a < doc_b)
-    via a bucket-key self-join. SHUFFLE_HASH-hinted: the planner's
+    via a bucket-key self-join — the one band join, shared by MinHash,
+    SimHash and the SRP oracle path. SHUFFLE_HASH-hinted: the planner's
     broadcast choice computed the ENTIRE signature subplan (shingle
     explode + aggregation / MapInPandas) a second time for the build
     side and then collected it through a serial BroadcastExchange

@@ -299,24 +299,19 @@ def srp_banded_near_dup(embeddings: DataFrame,
             arr = F.array(*[F.lit(float(x)) for x in p])
             bits.append(F.when(_dot(F.col("_v"), arr) >= 0,
                                F.lit("1")).otherwise(F.lit("0")))
-        structs.append(F.struct(F.lit(t).alias("tbl"),
+        structs.append(F.struct(F.lit(t).alias("band"),
                                 F.concat(*bits).alias("bucket")))
-    bands = (n.select("vec_id",
+    bands = (n.select(F.col("vec_id").alias("doc_id"),
                       F.explode(F.array(*structs)).alias("bb"))
-             .select("vec_id", "bb.tbl", "bb.bucket"))
-    # oracle path: candidate pairs from the NARROW band relation via a
-    # SHUFFLE_HASH self-join (the broadcast alternative recomputed the
-    # banding subplan for the build side and serialized it through a
-    # driver-side broadcast build — see _band_pairs in dedup.py),
-    # deduped BEFORE the exact confirm (the interpreted fold is
-    # expensive per pair), vectors joined back per unique pair as
-    # double arrays, sim in pure Catalyst expressions
-    a, b = bands.alias("a"), bands.hint("shuffle_hash").alias("b")
-    cand = (a.join(b, ["tbl", "bucket"])
-            .filter(F.col("a.vec_id") < F.col("b.vec_id"))
-            .select(F.col("a.vec_id").alias("vec_a"),
-                    F.col("b.vec_id").alias("vec_b"))
-            .distinct())
+             .select("doc_id", "bb.band", "bb.bucket"))
+    # oracle path: distinct candidate pairs from the NARROW band
+    # relation through the same (band, bucket) join as MinHash/SimHash
+    # (dedup._band_pairs), deduped BEFORE the exact confirm (the
+    # interpreted fold is expensive per pair), vectors joined back per
+    # unique pair as double arrays, sim in pure Catalyst expressions
+    from .dedup import _band_pairs
+    cand = _band_pairs(bands).select(F.col("doc_a").alias("vec_a"),
+                                     F.col("doc_b").alias("vec_b"))
     vecs = with_norm(widen_partitions(
         embeddings.select("vec_id", vec_col), min_bytes=0), vec_col) \
         .select("vec_id", "_v", "_norm")

@@ -332,14 +332,13 @@ def events_sessionize(spark, sf):
 
 
 def events_hourly_window(spark, sf):
-    """Tumbling-window aggregation over the events stream table (the
-    batch shape of streaming/windows.py)."""
-    e = load(spark, sf, "events")
-    return (e.groupBy(F.date_trunc("hour", "ts").alias("hour"),
-                      "event_type")
-            .agg(F.count("*").alias("n"),
-                 (F.sum(F.round(F.col("value") * 10000, 0).cast("long"))
-                  / 10000.0).alias("sum_value")))
+    """Tumbling-window aggregation over the events stream table.
+    Delegates to the SAME function the streaming test drives
+    (streaming/windows.py) — one implementation, batch and stream.
+    ``hour`` is the window start as TIMESTAMP; the session's pinned UTC
+    zone keeps it equal to the oracle's naive ``date_trunc`` hour."""
+    from .streaming.windows import hourly_event_counts
+    return hourly_event_counts(load(spark, sf, "events"))
 
 
 # ----------------------------------------------------- dedup/text/simsearch

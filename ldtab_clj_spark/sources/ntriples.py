@@ -67,23 +67,30 @@ _NT_UCHAR = re.compile(r"\\u[0-9A-Fa-f]{4}|\\U[0-9A-Fa-f]{8}")
 
 def _iri_unescape(iri: str) -> str:
     """UCHAR (\\uXXXX / \\UXXXXXXXX) unescaping inside IRIREF — the
-    only escapes the N-Triples grammar allows in IRIs (canonical NT
-    tooling escapes all non-ASCII IRI characters this way).
+    only escapes the N-Triples and Turtle grammars allow in IRIs
+    (canonical NT tooling escapes all non-ASCII IRI characters this
+    way); shared by both readers.
 
     Raises ValueError for codepoints outside Unicode or in the
     surrogate block (a lone surrogate would fail UTF-8 encoding much
-    later, at the Arrow/parquet boundary); parse_nt_line turns that
-    into the standard skip-the-line behavior."""
+    later, at the Arrow/parquet boundary) and for any backslash left
+    after the UCHARs (``\\z``, ``\\n``, ``\\u00ZZ11``). parse_nt_line
+    turns that into the standard skip-the-line behavior; the Turtle
+    reader converts it to TurtleError."""
     if "\\" not in iri:        # fast path: virtually all lines
         return iri
 
     def sub(m):
         cp = int(m.group(0)[2:], 16)
         if cp > 0x10FFFF or 0xD800 <= cp <= 0xDFFF:
-            raise ValueError(f"invalid UCHAR codepoint U+{cp:X}")
+            raise ValueError(
+                f"invalid UCHAR codepoint U+{cp:X} in IRI <{iri}>")
         return chr(cp)
 
-    return _NT_UCHAR.sub(sub, iri)
+    out = _NT_UCHAR.sub(sub, iri)
+    if "\\" in out:
+        raise ValueError(f"invalid escape in IRI <{iri}>")
+    return out
 
 
 def parse_nt_line(line: str, prefixes: list[tuple[str, str]]):
@@ -100,9 +107,9 @@ def parse_nt_line(line: str, prefixes: list[tuple[str, str]]):
         return _parse_groups(s_iri, s_blank, p_iri, o_iri, o_blank,
                              o_lex, o_lang, o_dt, prefixes)
     except ValueError:
-        # malformed UCHAR (out-of-range / surrogate codepoint): the
-        # line is unparseable — skip it like any other bad line
-        # instead of failing the whole task
+        # invalid escape or UCHAR codepoint: the line is unparseable —
+        # skip it like any other bad line instead of failing the
+        # whole task
         return None
 
 
@@ -167,14 +174,19 @@ def read_ntriples(spark: SparkSession, path: str,
     return parse_nt_lines(spark.read.text(path), prefixes, skipped_acc)
 
 
+def _statements_from_thin(thin: DataFrame) -> DataFrame:
+    """Parsed thin triples → the statement table: component closure →
+    stanza assembly → dedup. The tail of every ``import_*`` reader."""
+    from ..operators.components import assign_components
+    from ..operators.materialize import dedup_statements
+    from ..operators.stanza import thin_to_thick_df
+    return dedup_statements(thin_to_thick_df(assign_components(thin)))
+
+
 def import_ntriples(spark: SparkSession, path: str,
                     prefix_df: DataFrame,
                     skipped_acc=None) -> DataFrame:
     """Full `ldtab import file.nt` equivalent: parse → component
     closure → stanza assembly → dedup. Returns the statement table."""
-    from ..operators.components import assign_components
-    from ..operators.materialize import dedup_statements
-    from ..operators.stanza import thin_to_thick_df
-    thin = assign_components(
+    return _statements_from_thin(
         read_ntriples(spark, path, prefix_df, skipped_acc))
-    return dedup_statements(thin_to_thick_df(thin))

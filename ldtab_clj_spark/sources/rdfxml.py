@@ -25,13 +25,11 @@ assembly.
 from __future__ import annotations
 
 import xml.etree.ElementTree as ET
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
-from ..schemas import THIN
-from .turtle import _RDF, _XSD, _to_thin, has_scheme, resolve_against
+from .ntriples import _statements_from_thin
+from .turtle import _RDF, _XSD, _read_files, has_scheme, resolve_against
 
 _XML_NS = "http://www.w3.org/XML/1998/namespace"
 
@@ -221,29 +219,10 @@ def parse_rdfxml(text: str) -> list[tuple]:
 def read_rdfxml(spark: SparkSession, path: str,
                 prefix_df: DataFrame) -> DataFrame:
     """Distributed RDF/XML scan (one task per file) → thin triples."""
-    prefixes = [(r["prefix"], r["base"]) for r in prefix_df.collect()]
-    files = spark.read.text(path, wholetext=True)
-
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..core.canonical import content_hash
-        for pdf in batches:
-            rows = []
-            for text in pdf["value"]:
-                # file-scope blank labels (see turtle._to_thin)
-                salt = content_hash(text)[:8]
-                rows.extend((*t, "", 0)
-                            for t in _to_thin(parse_rdfxml(text),
-                                              prefixes, blank_salt=salt))
-            yield pd.DataFrame(rows, columns=[f.name for f in THIN.fields])
-
-    return files.mapInPandas(parse, THIN)
+    return _read_files(spark, path, prefix_df, parse_rdfxml)
 
 
 def import_rdfxml(spark: SparkSession, path: str,
                   prefix_df: DataFrame) -> DataFrame:
     """Full `ldtab import file.owl` equivalent."""
-    from ..operators.components import assign_components
-    from ..operators.materialize import dedup_statements
-    from ..operators.stanza import thin_to_thick_df
-    thin = assign_components(read_rdfxml(spark, path, prefix_df))
-    return dedup_statements(thin_to_thick_df(thin))
+    return _statements_from_thin(read_rdfxml(spark, path, prefix_df))

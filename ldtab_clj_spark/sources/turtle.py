@@ -36,7 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..core.canonical import curify_with
 from ..schemas import THIN
-from .ntriples import _unescape
+from .ntriples import _iri_unescape, _statements_from_thin, _unescape
 
 # PN_CHARS_BASE / PN_CHARS_U / PN_CHARS character classes from the
 # Turtle 1.1 grammar (§6.5) — prefixed names and blank labels accept
@@ -115,28 +115,6 @@ def resolve_against(base: str, iri: str) -> str:
     return out
 
 
-def _iri_unescape(iri: str) -> str:
-    """UCHAR (``\\uXXXX`` / ``\\UXXXXXXXX``) unescaping inside IRIREF —
-    the only escapes Turtle allows in IRIs; anything else errors.
-
-    Mirrors the N-Triples twin's codepoint validation: a lone
-    surrogate (``\\uD800``) or out-of-range ``\\U`` would otherwise
-    surface much later as an opaque UnicodeEncodeError inside an
-    executor task at the Arrow/parquet boundary — both readers fail
-    fast with their own error type instead."""
-    def sub(m):
-        cp = int(m.group(0)[2:], 16)
-        if cp > 0x10FFFF or 0xD800 <= cp <= 0xDFFF:
-            raise TurtleError(
-                f"invalid UCHAR codepoint U+{cp:X} in IRI <{iri}>")
-        return chr(cp)
-
-    out = re.sub(r"\\u[0-9A-Fa-f]{4}|\\U[0-9A-Fa-f]{8}", sub, iri)
-    if "\\" in out:
-        raise TurtleError(f"invalid escape in IRI <{iri}>")
-    return out
-
-
 def _tokens(text: str):
     pos, n = 0, len(text)
     while pos < n:
@@ -199,7 +177,10 @@ class _Parser:
         document URI to fall back to in a distributed scan; silently
         minting relative subjects would corrupt the statement table) —
         same contract as the RDF/XML reader."""
-        iri = _iri_unescape(iri)
+        try:
+            iri = _iri_unescape(iri)
+        except ValueError as ex:
+            raise TurtleError(str(ex)) from None
         if not self.base and not has_scheme(iri):
             raise TurtleError(
                 f"relative IRI <{iri}> with no @base in scope")
@@ -445,10 +426,12 @@ def _to_thin(raw: list[tuple],
     return out
 
 
-def read_turtle(spark: SparkSession, path: str,
-                prefix_df: DataFrame) -> DataFrame:
-    """Distributed Turtle scan (one task per file) → thin triples
-    (doc_id empty; run assign_components before stanza assembly)."""
+def _read_files(spark: SparkSession, path: str, prefix_df: DataFrame,
+                parse_text) -> DataFrame:
+    """Distributed per-file RDF scan (one ``wholetext`` row per file,
+    shared by the Turtle and RDF/XML readers): ``parse_text`` maps a
+    file's text to raw full-IRI triples, and blank labels are
+    file-scoped by a content salt (see _to_thin)."""
     prefixes = [(r["prefix"], r["base"]) for r in prefix_df.collect()]
     files = spark.read.text(path, wholetext=True)
 
@@ -459,19 +442,22 @@ def read_turtle(spark: SparkSession, path: str,
             for text in pdf["value"]:
                 salt = content_hash(text)[:8]
                 rows.extend((*t, "", 0)
-                            for t in _to_thin(parse_turtle(text),
+                            for t in _to_thin(parse_text(text),
                                               prefixes, blank_salt=salt))
             yield pd.DataFrame(rows, columns=[f.name for f in THIN.fields])
 
     return files.mapInPandas(parse, THIN)
 
 
+def read_turtle(spark: SparkSession, path: str,
+                prefix_df: DataFrame) -> DataFrame:
+    """Distributed Turtle scan (one task per file) → thin triples
+    (doc_id empty; run assign_components before stanza assembly)."""
+    return _read_files(spark, path, prefix_df, parse_turtle)
+
+
 def import_turtle(spark: SparkSession, path: str,
                   prefix_df: DataFrame) -> DataFrame:
     """Full `ldtab import file.ttl` equivalent: parse → component
     closure → stanza assembly → dedup. Returns the statement table."""
-    from ..operators.components import assign_components
-    from ..operators.materialize import dedup_statements
-    from ..operators.stanza import thin_to_thick_df
-    thin = assign_components(read_turtle(spark, path, prefix_df))
-    return dedup_statements(thin_to_thick_df(thin))
+    return _statements_from_thin(read_turtle(spark, path, prefix_df))

@@ -7,14 +7,18 @@ the cap, the displaced twins stay oracle-checked here and in
 tools/check_oracles.py.
 """
 
+import importlib.util
+from pathlib import Path
+
 import duckdb
 import pytest
 
-from ldtab_clj_spark.queries import (DRIVER_CAP, EXTRA_QUERIES, ORACLE_SQL,
-                                     QUERIES, STATE_AT_T_ORACLE,
-                                     order_history)
+from ldtab_clj_spark.queries import (ALL_QUERIES, DRIVER_CAP, EXTRA_QUERIES,
+                                     ORACLE_SQL, QUERIES, STATE_AT_T_ORACLE,
+                                     TABLES, order_history)
 
 SF = "/root/testdata/sf0.001"
+TOOL = Path(__file__).resolve().parent.parent / "tools" / "check_oracles.py"
 
 
 def test_driver_registry_fits_cap():
@@ -35,10 +39,40 @@ def test_registries_disjoint_and_oracled():
         assert name in ORACLE_SQL, f"{name} has no DuckDB oracle"
 
 
-def test_extra_queries_still_run(spark):
-    # the cheapest displaced twin from each family actually executes
-    for name in ("a4_max_transaction", "tpch_q6"):
-        assert EXTRA_QUERIES[name](spark, SF).count() > 0
+@pytest.fixture(scope="module")
+def norm_rows():
+    """tools/check_oracles.py's row normaliser (sorted columns,
+    norm_cell)."""
+    spec = importlib.util.spec_from_file_location("check_oracles", TOOL)
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod.norm_rows
+
+
+@pytest.fixture(scope="module")
+def duck():
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF}/{t}.parquet'")
+    yield con
+    con.close()
+
+
+@pytest.mark.parametrize("name", [
+    # the cheapest displaced twin from each family
+    "a4_max_transaction", "tpch_q6",
+    # queries on a shared implementation (the streaming hourly window,
+    # the MinHash/SimHash band join) and the SRP throughput twin
+    "events_hourly_window", "ann_srp_near_dup", "ann_srp_near_dup_sql",
+    "dedup_minhash_lsh", "dedup_simhash_pairs_sql"])
+def test_extra_queries_still_run(spark, duck, norm_rows, name):
+    """Value check against the DuckDB oracle, normalised as in
+    tools/check_oracles.py."""
+    got = ALL_QUERIES[name](spark, SF).toPandas()
+    want = duck.execute(ORACLE_SQL[name]).df()
+    assert sorted(got.columns) == sorted(want.columns)
+    assert len(got) > 0
+    assert norm_rows(got, got.columns) == norm_rows(want, want.columns)
 
 
 @pytest.mark.parametrize("tid", [1, 2, 3, 4, 5])

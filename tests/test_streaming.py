@@ -2,8 +2,6 @@
 cross-batch annotation backlog semantics, compared against the batch
 pipeline on the same corpus."""
 
-import time
-
 import pytest
 from pyspark.sql import Window, functions as F
 
@@ -180,52 +178,6 @@ def test_compaction_survives_concurrent_append(spark, tmp_path):
     # second compaction (no race) collapses to exactly the distinct set
     compact_ann_keys(spark, table)
     assert spark.read.parquet(keys_path).count() == 2
-
-
-def test_stateful_annotation_association(spark, tmp_path):
-    """R9 keyed-state variant: bare rows held, annotated twins win,
-    timeout flushes the tail."""
-    from ldtab_clj_spark.schemas import STATEMENT
-    from ldtab_clj_spark.streaming.annotate import \
-        with_annotation_association
-
-    in_dir = str(tmp_path / "stmt_in")
-    ann = '{"ex:curator":[{"datatype":"_IRI","meta":"owl:Axiom","object":"alice"}]}'
-    rows_b1 = [(1, 0, "graph", "ex:a", "ex:p", "ex:b", "_IRI", None),
-               (1, 0, "graph", "ex:x", "ex:q", "lit", "xsd:string", None)]
-    rows_b2 = [(1, 0, "graph", "ex:a", "ex:p", "ex:b", "_IRI", ann)]
-    spark.createDataFrame(rows_b1, STATEMENT).coalesce(1) \
-        .write.mode("append").parquet(in_dir)
-    spark.createDataFrame(rows_b2, STATEMENT).coalesce(1) \
-        .write.mode("append").parquet(in_dir)
-
-    stream = (spark.readStream.schema(STATEMENT)
-              .option("maxFilesPerTrigger", 1).parquet(in_dir))
-    out_dir = str(tmp_path / "assoc_out")
-    q = (with_annotation_association(stream).writeStream
-         .format("parquet").option("path", out_dir)
-         .option("checkpointLocation", str(tmp_path / "assoc_ckpt"))
-         .trigger(processingTime="1 second").start())
-    # let batches + the bare-row timeout fire, then stop
-    deadline = time.time() + 120
-    while time.time() < deadline:
-        time.sleep(2)
-        try:
-            rows = spark.read.parquet(out_dir).collect()
-        except Exception:
-            continue
-        keys = {(r.subject, r.annotation is not None) for r in rows}
-        if ("ex:a", True) in keys and ("ex:x", False) in keys:
-            break
-    q.stop()
-    rows = spark.read.parquet(out_dir).collect()
-    by_subj = {}
-    for r in rows:
-        by_subj.setdefault(r.subject, []).append(r.annotation)
-    # annotated twin won for ex:a (no bare duplicate emitted)
-    assert by_subj["ex:a"] == [ann]
-    # lone bare row flushed by timeout
-    assert by_subj["ex:x"] == [None]
 
 
 def test_watermarked_window_agg_stream_equals_batch(spark, tmp_path):

@@ -270,6 +270,13 @@ NT_NEGATIVE = [
      "<http://e/\\uD800> <http://e/p> <http://e/o> ."),
     ("nt-syntax-bad-esc-01",
      '<http://e/s> <http://e/p> "\\z" .'),
+    # IRIREF admits only UCHAR escapes: any other backslash is an error
+    ("nt-syntax-bad-uri-escape-z",
+     "<http://e/a\\zb> <http://e/p> <http://e/o> ."),
+    ("nt-syntax-bad-uri-escape-echar",
+     "<http://e/\\n> <http://e/p> <http://e/o> ."),
+    ("nt-syntax-bad-uri-bad-uchar",
+     "<http://e/\\u00ZZ11> <http://e/p> <http://e/o> ."),
 ]
 
 
